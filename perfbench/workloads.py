@@ -15,9 +15,11 @@ untouched call only builds a plan.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -36,17 +38,29 @@ from core import (
 from inputs import match_lists, reference_strings, request_pool
 
 # Input sizes. ER corpora come from sources.corpus.generate_corpus (12
-# lines per doc); copies per entity cycle 1..max_copies.
+# lines per doc); copies per entity cycle 1..max_copies, so er-default's
+# 800 entities make 2,000 docs. At that size cosine_join.score plus
+# mapside.candidates take ~45% of a traced pipeline.run's wall and ~68% of
+# its executor time (README.md); at 750 docs the per-stage checkpoint and
+# job overhead took most of it.
 ER_SIZES = {
-    "er-default": {"n_entities": 300, "max_copies": 4, "scale_knobs": False},
+    "er-default": {"n_entities": 800, "max_copies": 4, "scale_knobs": False},
     "er-scale": {"n_entities": 1000, "max_copies": 8, "scale_knobs": True},
 }
-# 60 requests, not the 100 that would put ten beyond p90: a serve run with
-# 100 took ~70 s, which with the ER runs left no margin in the time budget
-SERVE = {"refs": 100, "batch": 16, "pool": 400, "min_requests": 60,
-         "warmup": 3, "traced_requests": 30, "check_every": 10}
-API = {"n_to": 200, "n_from": 32}
-SETUP_REPS = 3
+# The ER warm-up op runs on the docs of the first 1/ER_WARMUP_SHARE of the
+# entities (all copy counts): it starts the Python workers and compiles the
+# pipeline's plans, which is most of what makes a first op slow, in ~25 s
+# on 4 cores against ~39 s for a cold op on the whole corpus.
+ER_WARMUP_SHARE = 4
+# A request is 64 variants against a 2,000-string index, whose to_mat
+# incremental_match broadcasts on every call. A request takes ~0.6 s on 4
+# cores, so a 10 s run times about 15, not the 100 that would put ten
+# beyond p90: 100 would not fit the time budget.
+SERVE = {"refs": 2000, "batch": 64, "pool": 100, "min_requests": 10,
+         "warmup": 2, "traced_requests": 10, "check_every": 2}
+API = {"n_to": 2000, "n_from": 64}
+# Input preparations per run; setup_s is their median. The first is cold.
+SETUP_REPS = {"er": 5, "serve": 3, "api": 3}
 
 SPANS = (
     "mapside.minhash", "mapside.candidates", "mapside.fit_idf",
@@ -54,7 +68,6 @@ SPANS = (
     "pipeline.run", "incremental.build_index", "incremental.request",
     "api.match", "api.group", "api.collect",
 )
-ER_LAYER_SPANS = SPANS[:7]
 
 # (name, unit, better): printed by every untraced run, in this order.
 # n/a where a workload has no such figure.
@@ -70,10 +83,10 @@ END_TO_END = (
     ("failed_frac", "ratio", "lower"),
 )
 # The machine-read result: defined on every workload, never 0, and steady
-# across seeds on a shared 4-core box (spread 0.07-0.12). docs_per_s and
-# latency_p50_ms spread 0.2-0.3 there (host contention doubled op times for
-# minutes at a time), above the largest bound a gate may have, so they are
-# printed but not gated.
+# across seeds on a shared 4-core box (spread 0.02-0.12 over ten seeds).
+# docs_per_s and latency_p50_ms are printed but not gated: when other
+# processes loaded the box, an ER op took 36 s instead of 21 s while its CPU
+# did not move.
 GATED = ("setup_s", "cpu_s_per_kdoc", "peak_rss_mb")
 
 # (name, unit, better) of the traced run. A layer the workload does not call
@@ -134,13 +147,16 @@ class Ctx:
     failed: int = 0
 
     def start_session(self, eventlog: bool = False) -> float:
-        """(Re)start the SparkSession on local[cpus]; returns its wall.
-        The traced session logs events into ``work/eventlog``."""
+        """Start the SparkSession on local[cpus]; returns its wall. The
+        traced session logs events into ``work/eventlog``. The driver heap
+        is pre-touched at its full size, so the JVM's resident set does not
+        depend on when the collector grows the heap."""
         from polyfuzz_spark.session import get_spark
 
         tmp = self.work / "tmp"
         conf = {"spark.driver.extraJavaOptions":
                 "-Djava.net.preferIPv4Stack=true -XX:-UsePerfData "
+                f"-Xms{os.environ['SPARK_DRIVER_MEMORY']} -XX:+AlwaysPreTouch "
                 f"-Djava.io.tmpdir={tmp}",
                 "spark.ui.showConsoleProgress": "false"}
         if eventlog:
@@ -195,13 +211,14 @@ def _log(msg: str) -> None:
     print(f"perfbench: {msg}", file=sys.stderr, flush=True)
 
 
-def _setup(ctx: Ctx, prepare) -> tuple[float, object]:
-    """Start the session (the JVM launch, ``ctx.start_s``), then prepare the
-    inputs ``SETUP_REPS`` times. Returns (median preparation wall, what the
-    last preparation returned)."""
-    ctx.start_s = ctx.start_session()
+def _setup(ctx: Ctx, prepare, reps: int) -> tuple[float, object]:
+    """Start the session (the JVM launch, ``ctx.start_s``; with the event
+    log on in a traced run), then prepare the inputs ``reps`` times.
+    Returns (median preparation wall, what the last preparation
+    returned)."""
+    ctx.start_s = ctx.start_session(eventlog=ctx.trace)
     walls, prepared = [], None
-    for rep in range(SETUP_REPS):
+    for rep in range(reps):
         t0 = time.monotonic()
         prepared = prepare(rep)
         walls.append(time.monotonic() - t0)
@@ -288,7 +305,74 @@ def _span_layers(ctx: Ctx) -> dict:
 
 
 # ------------------------------------------------------------------ ER
+# The operators ERPipeline.run calls, by the names plans.pipeline imports
+# them under, and the span each is timed in. During the traced op each name
+# is rebound to a wrapper that opens the span and forces the result at the
+# boundary, so the layer spans nest inside the measured pipeline.run span.
+ER_OPERATORS = {
+    "minhash_bands_mapside": "mapside.minhash",
+    "candidates_from_bands": "mapside.candidates",
+    "fit_idf_mapside": "mapside.fit_idf",
+    "vectorize_packed_mapside": "mapside.vectorize",
+    "score_candidates_packed": "cosine_join.score",
+    "top_n_matches": "topk",
+    "attach_to_keys": "topk",
+    "connected_components": "linkage.cc",
+}
+ER_LAYER_SECONDS = (
+    ("mapside.minhash", "mapside.minhash_s"),
+    ("mapside.candidates", "mapside.candidates_s"),
+    ("mapside.fit_idf", "mapside.fit_idf_s"),
+    ("mapside.vectorize", "mapside.vectorize_s"),
+    ("cosine_join.score", "cosine_join.score_s"),
+    ("topk", "topk.s"),
+    ("linkage.cc", "linkage.cc_s"),
+)
+
+
+def _force(out):
+    """Materialize an operator's lazy result (a DataFrame, or a TfidfModel's
+    IDF table) and return the materialized value for the caller to use."""
+    from polyfuzz_spark.operators.tfidf import TfidfModel
+
+    if isinstance(out, TfidfModel):
+        return TfidfModel(out.idf.localCheckpoint(eager=True), out.n_docs,
+                          out.config)
+    return out.localCheckpoint(eager=True)
+
+
+@contextmanager
+def _spans_in_pipeline(tr: Tracer, outputs: dict):
+    """While open, the ``ER_OPERATORS`` names in polyfuzz_spark.plans.pipeline
+    are span-opening, output-forcing wrappers. ``outputs`` collects each
+    operator's forced result, plus the edges connected_components was given
+    and the ``stats`` it filled, for the layer counts read afterwards."""
+    from polyfuzz_spark.plans import pipeline
+
+    def wrap(name, span, fn):
+        def traced(*args, **kwargs):
+            if name == "connected_components":
+                outputs["edges"] = args[0] if args else kwargs["edges"]
+                kwargs["stats"] = outputs["cc_stats"] = {}
+            with tr.span(span):
+                out = _force(fn(*args, **kwargs))
+            outputs[name] = out
+            return out
+        return traced
+
+    saved = {name: getattr(pipeline, name) for name in ER_OPERATORS}
+    try:
+        for name, span in ER_OPERATORS.items():
+            setattr(pipeline, name, wrap(name, span, saved[name]))
+        yield
+    finally:
+        for name, fn in saved.items():
+            setattr(pipeline, name, fn)
+
+
 def _er(ctx: Ctx, workload: str) -> Outcome:
+    from pyspark.sql import functions as F
+
     from polyfuzz_spark.operators.adaptive import SCALE_KNOBS
     from polyfuzz_spark.plans.pipeline import ERConfig, ERPipeline
     from polyfuzz_spark.sources.corpus import generate_corpus
@@ -305,24 +389,26 @@ def _er(ctx: Ctx, workload: str) -> Outcome:
         ).write.parquet(str(path))
         return path
 
-    setup_s, corpus_path = _setup(ctx, prepare)
+    setup_s, corpus_path = _setup(ctx, prepare, SETUP_REPS["er"])
     labels = {
         r["doc_id"]: r["entity_id"]
         for r in ctx.spark.read.parquet(str(corpus_path))
         .select("doc_id", "entity_id").collect()
     }
-    n_docs = len(labels)
-    seen = {}  # (candidates, survivors) of the first op: identical after
-    last = {}  # the last successful op's (run_dir, summary)
+    warm_entities = size["n_entities"] // ER_WARMUP_SHARE
+    warm_docs = sum(1 for e in labels.values() if e < warm_entities)
+    seen = {}  # docs -> (candidates, survivors) of the first op that size
+    last = {}  # the last successful full op's (run_dir, summary)
 
-    def run_op(k: int):
+    def run_op(k: int, warm_up: bool):
         run_dir = er_dir / f"op-{k}"
-        summary = ERPipeline(ctx.spark, str(run_dir), cfg).run(
-            ctx.spark.read.parquet(str(corpus_path))
-        )
+        corpus = ctx.spark.read.parquet(str(corpus_path))
+        if warm_up:
+            corpus = corpus.where(F.col("entity_id") < warm_entities)
+        summary = ERPipeline(ctx.spark, str(run_dir), cfg).run(corpus)
         return run_dir, summary
 
-    def check(k: int, summary) -> bool:
+    def check(k: int, summary, n_docs: int) -> bool:
         ing, sur = summary["ingest"], summary["survivors"]
         problems = []
         if ing.get("sha256_violations") != 0:
@@ -332,34 +418,31 @@ def _er(ctx: Ctx, workload: str) -> Outcome:
         if sur["rows"] != ing["rows"] - sur.get("rows_dropped", -1):
             problems.append("survivors != ingest - rows_dropped")
         got = (summary["candidates"]["rows"], sur["rows"])
-        if seen.setdefault("counts", got) != got:
+        if seen.setdefault(n_docs, got) != got:
             problems.append(f"(candidates, survivors) {got} != first op "
-                            f"{seen['counts']}")
+                            f"{seen[n_docs]}")
         if problems:
             ctx.fail(f"{workload} op {k}: " + "; ".join(problems))
         return not problems
 
-    def op(k: int, tag: str):
+    def op(k: int, tag: str, warm_up: bool = False):
         t0 = time.monotonic()
-        res = ctx.attempt(f"{workload} {tag} op {k}", lambda: run_op(k))
+        res = ctx.attempt(f"{workload} {tag} op {k}",
+                          lambda: run_op(k, warm_up))
         _log(f"{workload} {tag} op {k}: {time.monotonic() - t0:.2f} s"
              + (f", {res[1]['candidates']['rows']} candidate pairs"
                 if res else ""))
-        if res is None or not check(k, res[1]):
+        n_docs = warm_docs if warm_up else len(labels)
+        if res is None or not check(k, res[1], n_docs):
             return None
-        last["op"] = res
-        return res[1]["ingest"]["rows"]
+        if not warm_up:
+            last["op"] = res
+        return n_docs
 
-    op(0, "warm-up")
-    base = 1
-    if ctx.trace:  # untraced baseline for the tracing overhead
-        t0 = time.monotonic()
-        op(base, "untraced")
-        untraced_wall = time.monotonic() - t0
-        return _er_traced(ctx, workload, cfg, corpus_path, labels,
-                          untraced_wall, op, last,
-                          lambda: prepare(SETUP_REPS))
-    loop = _timed_loop(ctx, lambda i: op(base + i, "timed"), min_ops=1)
+    op(0, "warm-up", warm_up=True)
+    if ctx.trace:
+        return _er_traced(ctx, workload, cfg, corpus_path, labels, op, last)
+    loop = _timed_loop(ctx, lambda i: op(1 + i, "timed"), min_ops=1)
 
     b3 = 0.0
     if last:
@@ -371,135 +454,78 @@ def _er(ctx: Ctx, workload: str) -> Outcome:
     return Outcome(_e2e(ctx, setup_s, loop, bcubed_f1=b3), {})
 
 
-def _er_traced(ctx: Ctx, workload, cfg, corpus_path, labels,
-               untraced_wall, op, last, prepare_again) -> Outcome:
-    from pyspark.sql import functions as F
-
-    from polyfuzz_spark.operators.cosine_join import score_candidates_packed
-    from polyfuzz_spark.operators.linkage import (
-        connected_components,
-        filter_edges,
-    )
-    from polyfuzz_spark.operators.mapside import (
-        both_orientations,
-        candidates_from_bands,
-        fit_idf_mapside,
-        minhash_bands_mapside,
-        vectorize_packed_mapside,
-    )
-    from polyfuzz_spark.operators.tfidf import TfidfModel
-    from polyfuzz_spark.operators.topk import attach_to_keys, top_n_matches
-
-    ctx.stop_session()
-    ctx.start_session(eventlog=True)
-    prepare_again()  # starts the new context's Python workers
-    spark, tr = ctx.spark, ctx.tracer
-    tr.op = "er-layers"
-    L: dict = {}
-
-    def layers():
-        docs = spark.read.parquet(str(corpus_path)).select(
-            "doc_id", F.col(cfg.key_col).alias("key")
-        ).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        with tr.span("mapside.minhash"):
-            bands = minhash_bands_mapside(
-                docs, "key", cfg.tfidf, num_hashes=cfg.num_hashes,
-                bands=cfg.bands,
-            ).localCheckpoint(eager=True)
-        L["mapside.band_rows"] = bands.count()
-        with tr.span("mapside.candidates"):
-            cands = candidates_from_bands(
-                bands, None, max_bucket_size=cfg.max_bucket_size,
-                min_shared_bands=cfg.min_shared_bands, emit_both=False,
-                hot_bucket=cfg.hot_bucket, max_salt=cfg.max_salt,
-            ).localCheckpoint(eager=True)
-        n_cands = cands.count()
-        L["mapside.candidate_pairs"] = n_cands
-        L["mapside.pairs_per_doc"] = n_cands / n_docs
-        # same-entity share of the candidates, and of all same-entity pairs
-        lab = spark.createDataFrame(
-            [(int(d), int(e)) for d, e in labels.items()],
-            "doc_id long, entity_id long",
-        )
-        same = (
-            cands.join(lab.toDF("from_id", "fe"), "from_id")
-            .join(lab.toDF("to_id", "te"), "to_id")
-            .where(F.col("fe") == F.col("te")).count()
-        )
-        sizes = np.bincount(np.unique(list(labels.values()),
-                                      return_inverse=True)[1])
-        true_pairs = int((sizes * (sizes - 1) // 2).sum())
-        L["mapside.pair_precision"] = same / n_cands if n_cands else 0.0
-        L["mapside.pair_recall"] = same / true_pairs if true_pairs else 0.0
-        with tr.span("mapside.fit_idf"):
-            model = fit_idf_mapside(docs, "key", cfg.tfidf)
-            model = TfidfModel(model.idf.localCheckpoint(eager=True),
-                               model.n_docs, model.config)
-        L["mapside.vocab_terms"] = model.idf.count()
-        with tr.span("mapside.vectorize"):
-            packed = vectorize_packed_mapside(
-                model, docs, "key", compact=True
-            ).localCheckpoint(eager=True)
-        L["mapside.nnz"] = packed.select(F.sum(F.size("t"))).first()[0]
-        with tr.span("cosine_join.score") as s:
-            scores = score_candidates_packed(cands, packed, packed) \
-                .localCheckpoint(eager=True)
-        n_scored = scores.count()
-        L["cosine_join.pairs_per_s"] = n_scored / (s["end"] - s["start"])
-        L["cosine_join.kept_frac"] = (
-            scores.where(F.col("sim") >= cfg.min_similarity).count()
-            / n_scored if n_scored else 0.0
-        )
-        with tr.span("topk"):
-            matches = attach_to_keys(
-                top_n_matches(both_orientations(scores, carry=("sim",)),
-                              docs, cfg.top_n, cfg.min_similarity),
-                docs,
-            ).localCheckpoint(eager=True)
-        L["topk.rows_out"] = matches.count()
-        stats: dict = {}
-        with tr.span("linkage.cc"):
-            edges = filter_edges(
-                matches.select(
-                    F.col("from_id").cast("string").alias("from_key"),
-                    F.col("to_id").cast("string").alias("to_key"),
-                    "similarity",
-                ),
-                cfg.link_min_similarity,
-            )
-            cc = connected_components(edges, stats=stats) \
-                .localCheckpoint(eager=True)
-        L["linkage.edges"] = edges.count()
-        sizes = cc.groupBy("cluster_id").count()
-        L["linkage.components"] = sizes.count()
-        L["linkage.max_component"] = (
-            sizes.agg(F.max("count")).first()[0] or 0)
-        L["linkage.iterations"] = stats.get("iterations", 0)
-
-    ctx.attempt(f"{workload} traced layer pass", layers)
-    tr.op = "er-pipeline"
-    with tr.span("pipeline.run") as s:
+def _er_traced(ctx: Ctx, workload, cfg, corpus_path, labels, op,
+               last) -> Outcome:
+    """One untraced op, then one op with the layer spans inside it."""
+    t0 = time.monotonic()
+    op(1, "untraced")
+    untraced_wall = time.monotonic() - t0
+    tr, outputs = ctx.tracer, {}
+    tr.op = "er-traced"
+    with tr.span("pipeline.run") as run, _spans_in_pipeline(tr, outputs):
         op(2, "traced")
+    wall = run["end"] - run["start"]
+    layers = [s for s in tr.spans if s["parent"] == run["id"]]
+    L = {key: tr.total(span) for span, key in ER_LAYER_SECONDS}
+    L["pipeline.unattributed_s"] = wall - sum(s["end"] - s["start"]
+                                              for s in layers)
+    L["trace.overhead_frac"] = wall / untraced_wall - 1
     if "op" in last:
         run_dir, _ = last["op"]
         L["pipeline.ckpt_mb_per_input_mb"] = (
             _du_mb(run_dir) / _du_mb(corpus_path))
-    traced_wall = s["end"] - s["start"]
-    layer_total = sum(tr.total(name) for name in ER_LAYER_SPANS)
-    L["pipeline.unattributed_s"] = traced_wall - layer_total
-    L["trace.overhead_frac"] = traced_wall / untraced_wall - 1
-    for span, key in (
-        ("mapside.minhash", "mapside.minhash_s"),
-        ("mapside.candidates", "mapside.candidates_s"),
-        ("mapside.fit_idf", "mapside.fit_idf_s"),
-        ("mapside.vectorize", "mapside.vectorize_s"),
-        ("cosine_join.score", "cosine_join.score_s"),
-        ("topk", "topk.s"),
-        ("linkage.cc", "linkage.cc_s"),
-    ):
-        L[key] = tr.total(span)
+    missing = sorted(set(ER_OPERATORS) - set(outputs))
+    if missing:
+        ctx.fail(f"{workload} traced op: ERPipeline.run called none of "
+                 f"{missing}")
+    else:
+        ctx.attempt(f"{workload} layer counts", lambda: L.update(
+            _er_layer_counts(ctx.spark, cfg, outputs, labels, tr)))
     return _traced_outcome(ctx, L)
+
+
+def _er_layer_counts(spark, cfg, out: dict, labels: dict,
+                     tr: Tracer) -> dict:
+    """Counts of the traced op's forced layer outputs, read after the op."""
+    from pyspark.sql import functions as F
+
+    L = {"mapside.band_rows": out["minhash_bands_mapside"].count()}
+    cands = out["candidates_from_bands"]
+    n_cands = cands.count()
+    L["mapside.candidate_pairs"] = n_cands
+    L["mapside.pairs_per_doc"] = n_cands / len(labels)
+    # same-entity share of the candidates, and of all same-entity pairs
+    lab = spark.createDataFrame(
+        [(int(d), int(e)) for d, e in labels.items()],
+        "doc_id long, entity_id long",
+    )
+    same = (
+        cands.join(lab.toDF("from_id", "fe"), "from_id")
+        .join(lab.toDF("to_id", "te"), "to_id")
+        .where(F.col("fe") == F.col("te")).count()
+    )
+    sizes = np.bincount(np.unique(list(labels.values()),
+                                  return_inverse=True)[1])
+    true_pairs = int((sizes * (sizes - 1) // 2).sum())
+    L["mapside.pair_precision"] = same / n_cands if n_cands else 0.0
+    L["mapside.pair_recall"] = same / true_pairs if true_pairs else 0.0
+    L["mapside.vocab_terms"] = out["fit_idf_mapside"].idf.count()
+    L["mapside.nnz"] = out["vectorize_packed_mapside"].select(
+        F.sum(F.size("t"))).first()[0]
+    scores = out["score_candidates_packed"]
+    n_scored = scores.count()
+    L["cosine_join.pairs_per_s"] = n_scored / tr.total("cosine_join.score")
+    L["cosine_join.kept_frac"] = (
+        scores.where(F.col("sim") >= cfg.min_similarity).count() / n_scored
+        if n_scored else 0.0
+    )
+    L["topk.rows_out"] = out["attach_to_keys"].count()
+    L["linkage.edges"] = out["edges"].count()
+    comp = out["connected_components"].groupBy("cluster_id").count()
+    L["linkage.components"] = comp.count()
+    L["linkage.max_component"] = comp.agg(F.max("count")).first()[0] or 0
+    L["linkage.iterations"] = out["cc_stats"].get("iterations", 0)
+    return L
 
 
 def _traced_outcome(ctx: Ctx, L: dict) -> Outcome:
@@ -568,7 +594,7 @@ def serve_stream(ctx: Ctx) -> Outcome:
     def prepare(rep):
         return build_index(*fit())
 
-    setup_s, ix = _setup(ctx, prepare)
+    setup_s, ix = _setup(ctx, prepare, SETUP_REPS["serve"])
     sampled: list = []  # (keys, rank-1 (to_id, sim_milli) per row)
     hits = [0, 0]
 
@@ -638,14 +664,15 @@ def serve_stream(ctx: Ctx) -> Outcome:
 
 
 def _serve_traced(ctx: Ctx, ix, fit, op, base, build_index) -> Outcome:
-    untraced = [0.0] * SERVE["traced_requests"]
+    """Untraced requests, a traced index build and the same requests under
+    spans; then one traced facade call, which measures the api.* layers."""
+    n = SERVE["traced_requests"]
+    untraced = []
     # _timed_loop is not used here: the baseline is a fixed request count
-    for i in range(len(untraced)):
+    for i in range(n):
         t = time.monotonic()
         op(base + i, ix, "untraced")
-        untraced[i] = time.monotonic() - t
-    ctx.stop_session()
-    ctx.start_session(eventlog=True)
+        untraced.append(time.monotonic() - t)
     tr = ctx.tracer
     tr.op = "serve-build"
     model, to_vec = fit(force=True)
@@ -653,30 +680,35 @@ def _serve_traced(ctx: Ctx, ix, fit, op, base, build_index) -> Outcome:
         ix = build_index(model, to_vec)
     L = {"incremental.build_index_s": s["end"] - s["start"],
          "incremental.index_mb": (ix.to_mat.nbytes + ix.idf.nbytes) / 1e6}
-    for k in range(SERVE["warmup"]):
-        op(k, ix, "traced warm-up")
     traced = []
-    for i in range(SERVE["traced_requests"]):
+    for i in range(n):
         tr.op = f"request-{i}"
         with tr.span("incremental.request") as s:
             op(base + i, ix, "traced")
         traced.append(s["end"] - s["start"])
     L["trace.overhead_frac"] = float(np.median(traced) /
                                      np.median(untraced) - 1)
+    facade_op, _ = _facade(ctx)
+    facade_op(0, traced=True, tag="traced")
+    L.update(_api_seconds(tr, calls=1))
     out = _traced_outcome(ctx, L)
     req = {c: out.layers[f"incremental.request.{c}"] for c in SPAN_COUNTERS}
-    out.layers["incremental.jobs_per_request"] = req["jobs"] / len(traced)
+    out.layers["incremental.jobs_per_request"] = req["jobs"] / n
     out.layers["incremental.exec_frac"] = req["task_s"] / sum(traced)
+    _api_jobs(out, calls=1)
     return out
 
 
 # ----------------------------------------------------------------- api
-def api_match_group(ctx: Ctx) -> Outcome:
+def _facade(ctx: Ctx):
+    """(op, quality) for facade calls on the seeded match lists:
+    ``PolyFuzzSpark("TF-IDF").match(from, to).group(link_min_similarity=
+    0.75).matches_pandas()``, each output checked. A traced call runs match,
+    group and the collect in spans, forcing the matches at each boundary.
+    ``quality`` gets (top1_accuracy, bcubed_f1) of every passing call."""
     from polyfuzz_spark.api import PolyFuzzSpark
 
     frm, to, truth = match_lists(ctx.seed, API["n_to"], API["n_from"])
-    setup_s, _ = _setup(ctx, lambda rep: match_lists(
-        ctx.seed, API["n_to"], API["n_from"]))
     quality = []
 
     def call(k: int, traced: bool):
@@ -713,32 +745,43 @@ def api_match_group(ctx: Ctx) -> Outcome:
         return not problems
 
     def op(k: int, traced: bool = False, tag: str = "timed"):
+        t0 = time.monotonic()
         pdf = ctx.attempt(f"api-match-group {tag} call {k}",
                           lambda: call(k, traced))
+        _log(f"api-match-group {tag} call {k}: {time.monotonic() - t0:.2f} s")
         if pdf is None or not check(k, pdf):
             return None
         return len(frm)
 
+    return op, quality
+
+
+def _api_seconds(tr: Tracer, calls: int) -> dict:
+    return {f"{span}_s": tr.total(span) / calls
+            for span in ("api.match", "api.group", "api.collect")}
+
+
+def _api_jobs(out: Outcome, calls: int) -> None:
+    out.layers["api.jobs_per_call"] = sum(
+        out.layers[f"{s}.jobs"] for s in ("api.match", "api.group",
+                                          "api.collect")) / calls
+
+
+def api_match_group(ctx: Ctx) -> Outcome:
+    setup_s, _ = _setup(ctx, lambda rep: match_lists(
+        ctx.seed, API["n_to"], API["n_from"]), SETUP_REPS["api"])
+    op, quality = _facade(ctx)
     op(0, tag="warm-up")
     if ctx.trace:
         t0 = time.monotonic()
         op(1, tag="untraced")
         untraced_wall = time.monotonic() - t0
-        ctx.stop_session()
-        ctx.start_session(eventlog=True)
-        op(2, tag="traced warm-up")
         t0 = time.monotonic()
-        op(3, traced=True, tag="traced")
-        traced_wall = time.monotonic() - t0
-        tr = ctx.tracer
-        L = {"api.match_s": tr.total("api.match"),
-             "api.group_s": tr.total("api.group"),
-             "api.collect_s": tr.total("api.collect"),
-             "trace.overhead_frac": traced_wall / untraced_wall - 1}
+        op(2, traced=True, tag="traced")
+        L = _api_seconds(ctx.tracer, calls=1)
+        L["trace.overhead_frac"] = (time.monotonic() - t0) / untraced_wall - 1
         out = _traced_outcome(ctx, L)
-        out.layers["api.jobs_per_call"] = sum(
-            out.layers[f"{s}.jobs"] for s in ("api.match", "api.group",
-                                              "api.collect"))
+        _api_jobs(out, calls=1)
         return out
     loop = _timed_loop(ctx, lambda i: op(1 + i), min_ops=1)
     top1, b3 = quality[-1] if quality else (0.0, 0.0)
